@@ -13,8 +13,11 @@ Reference semantics (lanterndata/lantern):
   :func:`check_dims` in pipelines that need the hard failure.
 
 Everything here is built from ``zip_with``/``aggregate``/``bit_count`` so
-the whole expression stays JVM-side inside whole-stage codegen — no Python
-boundary in the hot path. Elements are cast to double first so results are
+the whole expression stays JVM-side — no Python boundary in the hot path.
+It is NOT compiled code, though: in Spark 4.1 ``ZipWith`` and
+``ArrayAggregate`` are ``CodegenFallback`` expressions, so whole-stage
+codegen calls back into their interpreted ``eval`` (a per-element lambda
+fold) for every row. Elements are cast to double first so results are
 bit-identical to a double-precision oracle (same sequential fold order).
 """
 

@@ -2170,17 +2170,17 @@ def hnsw_search_df(
         # so the prepped vectors and the probed-shard SETS are
         # bit-identical; the kernel reads the query matrix from the
         # broadcast and the routed relation is narrow (position, shard)
-        qrows = queries.select(
-            F.col(q_id_col).cast("long"), F.col(q_vec_col)
-        ).collect()
-        if qrows:
-            raw = [list(r[1]) for r in qrows]
-            qids0 = np.empty(len(qrows), dtype=object)
-            qids0[:] = [r[0] for r in qrows]
+        from lanterndb_spark.plans.shape import collect_keyed_matrix
+
+        qids0, raw = collect_keyed_matrix(
+            queries.select(F.col(q_id_col).cast("long"), F.col(q_vec_col)),
+            dtype=np.int64 if metric == "hamming" else np.float64,
+        )
+        if len(qids0):
             if metric == "hamming":
                 qk, Qp = qids0, _bits_rows(raw)
             else:
-                Qp = np.asarray(raw, dtype=np.float64)
+                Qp = raw
                 if metric == "cos":
                     qk, Qp = _norm_rows(qids0, Qp)
                 else:
@@ -2220,8 +2220,10 @@ def hnsw_search_df(
                         np.arange(nq, dtype=np.int32), len(sh))
                     shards = np.tile(sh, nq)
                 qbc = queries.sparkSession.sparkContext.broadcast((qk, Qp))
-                routed = queries.sparkSession.createDataFrame(pd.DataFrame({
-                    "__pos": pos, "__shard": shards}))
+                routed = queries.sparkSession.createDataFrame(
+                    pd.DataFrame({"__pos": pos, "__shard": shards}),
+                    "__pos int, __shard int",
+                )
         # zero collected/prepped queries: fall through to the executor
         # shape, which evaluates the (empty) lineage into the same
         # empty result frame

@@ -39,7 +39,7 @@ from lanterndb_spark.operators.knn import knn
 # vs 8.1 s at density 16, 328.8 s vs 24.1 s at density 128 — arrow's
 # fixed cost (worker spin-up + probed-row serialization) is ~3-8 s
 # flat, so breakeven density is ~2-3; gate at 8 to keep genuinely
-# small batches on the lower-latency codegen join.
+# small batches on the lower-latency JVM expression join.
 _ARROW_QPC_CROSSOVER = 8
 # ADC coarse-cut route: at and above this dim the ivfpq kernel decodes
 # the code block once and rides a dgemm cut (r13 — the per-subvector
@@ -338,14 +338,37 @@ def _partial_topk(k: int, id_col: str):
     return partial_topk
 
 
+# elements of the (B, nlist, dim) difference tensor per centroid-scoring
+# block (2^25 f64 = 256 MB)
+_ROUTE_BLOCK_ELEMS = 1 << 25
+
+
+def _route_block(cents: np.ndarray) -> int:
+    dim = cents.shape[1] if cents.ndim == 2 else 1
+    return max(1, _ROUTE_BLOCK_ELEMS // max(len(cents) * dim, 1))
+
+
+def _route_probes(cents: np.ndarray, Q: np.ndarray, np_eff: int) -> np.ndarray:
+    """(nq, np_eff) nearest-centroid ids per query — the SAME
+    ``((cents - q)**2).sum`` formulation and np.argsort as ivf_search /
+    ivf_search_batch, so probe choice is bit-identical to the
+    driver-list forms even at near-tied centroid distances (a matmul
+    expansion can order such ties differently). Each query's row is
+    computed on its own, so blocking never changes a probe list; the
+    blocks keep the difference tensor under ``_ROUTE_BLOCK_ELEMS``."""
+    blk = _route_block(cents)
+    out = np.empty((len(Q), np_eff), dtype=np.int64)
+    for s in range(0, len(Q), blk):
+        qb = Q[s : s + blk]
+        d = ((cents[None, :, :] - qb[:, None, :]) ** 2).sum(-1)
+        out[s : s + blk] = np.argsort(d, axis=1)[:, :np_eff]
+    return out
+
+
 def _centroid_route(bc, np_eff: int):
     """mapInPandas generator routing each query to its ``np_eff``
-    nearest centroids — the SAME ``((cents - q)**2).sum`` formulation
-    and np.argsort as ivf_search / ivf_search_batch, so probe choice is
-    bit-identical to the driver-list forms even at near-tied centroid
-    distances (a matmul expansion can order such ties differently).
-    Blocked so the (B, nlist, dim) difference tensor stays <=~256 MB.
-    Shared by ivf_search_df and ivfpq_search_df; emits
+    nearest centroids with :func:`_route_probes`, one block at a time.
+    Shared by ivf_search_df and ivfpq_search_df's executor route; emits
     (__qid, __q, cluster_id) x np_eff rows per query."""
     def route(batches):
         for pdf in batches:
@@ -354,12 +377,10 @@ def _centroid_route(bc, np_eff: int):
             cents = bc.value
             qids = pdf["__qid"]
             qarr = np.asarray(pdf["__q"].tolist(), dtype=np.float64)
-            dim = cents.shape[1] if cents.ndim == 2 else 1
-            blk = max(1, (1 << 25) // max(len(cents) * dim, 1))
+            blk = _route_block(cents)
             for s in range(0, len(qarr), blk):
                 qb = qarr[s : s + blk]
-                d = ((cents[None, :, :] - qb[:, None, :]) ** 2).sum(-1)
-                probes = np.argsort(d, axis=1)[:, :np_eff]
+                probes = _route_probes(cents, qb, np_eff)
                 B = len(qb)
                 yield pd.DataFrame({
                     "__qid": qids.iloc[s : s + B].repeat(np_eff).to_numpy(),
@@ -368,6 +389,267 @@ def _centroid_route(bc, np_eff: int):
                 })
 
     return route
+
+
+def _recut_ties(qi, ri, d, kk: int):
+    """Tie-inclusive per-query cut of a candidate superset: keep every
+    pair whose distance is at most its query's kk-th smallest."""
+    order = np.lexsort((ri, d, qi))
+    qi, ri, d = qi[order], ri[order], d[order]
+    starts = np.flatnonzero(np.r_[True, qi[1:] != qi[:-1]])
+    runs = np.diff(np.r_[starts, len(qi)])
+    kth = starts + np.minimum(kk, runs) - 1
+    keep = d <= np.repeat(d[kth], runs)
+    return qi[keep], ri[keep], d[keep]
+
+
+def _pair_dist(X, Q, xn, qn, qi, ri, metric: str) -> np.ndarray:
+    """Distance of each (Q[qi], X[ri]) pair, computed from that pair's
+    two vectors alone — so a pair's value never depends on which other
+    rows or queries share its block, salt, batch or task. Gathers in
+    chunks of <= 2^22 elements."""
+    out = np.empty(len(qi), dtype=np.float64)
+    step = max(1, (1 << 22) // max(X.shape[1], 1))
+    for s in range(0, len(qi), step):
+        q, r = qi[s : s + step], ri[s : s + step]
+        if metric == "cos":
+            dot = (X[r] * Q[q]).sum(1)
+            out[s : s + step] = 1.0 - dot / qn[q] / xn[r]
+        else:
+            out[s : s + step] = ((X[r] - Q[q]) ** 2).sum(1)
+    return out
+
+
+def _flat_block_topk(X: np.ndarray, Q: np.ndarray, kk: int, metric: str):
+    """Score one base block ``X`` against the queries ``Q`` that probe
+    it and keep each query's top ``kk`` — the scoring math of both
+    ivf_search_df arrow kernels (the executor route's cogroup and the
+    driver route's fused scan). Returns ``(qi, ri, d)``: indices into
+    ``Q`` and ``X`` and the distances, boundary ties kept for the
+    caller's (dist, id) cut.
+
+    A blocked matmul picks a superset of each query's top kk (its
+    cancellation error is bounded by ~1e-16 x the NORMS, so a 2e-9
+    relative margin on the threshold keeps every true member), then
+    :func:`_pair_dist` rescores the superset pair by pair and the cut is
+    re-made on those values. The emitted distances are therefore a
+    function of the pair alone: equal base vectors tie exactly, and the
+    rows do not depend on how the scan split the base into blocks.
+
+    QUERY-MAJOR (r11): the distance matrix is (queries, rows) so the
+    per-query cut is ONE contiguous partition(axis=1) + ONE nonzero over
+    the whole block. At k=10 eval shapes it measured equal to the older
+    row-major kernel (spark-warehouse/ab_qmajor_r12*.json — small-k cuts
+    are not the bottleneck); its measured win is the LARGE-k coarse cut
+    of the hybrid candidate stage (k=ef), 24.2 s -> 11.9 s at 2k queries
+    over 2M (spark-warehouse/hybrid_profile_r11.json)."""
+    xsel = qsel = None
+    if metric == "cos":
+        # zero-norm rows/queries have undefined angle — drop, mirroring
+        # the expr path's NULL-dist filter (distance.py cos_dist
+        # convention)
+        xn = np.sqrt((X**2).sum(1))
+        xsel = np.flatnonzero(xn > 0.0)
+        X, xn = X[xsel], xn[xsel]
+        qn = np.sqrt((Q**2).sum(1))
+        qsel = np.flatnonzero(qn > 0.0)
+        Q, qn = Q[qsel], qn[qsel]
+    else:
+        xn, qn = (X**2).sum(1), (Q**2).sum(1)
+    nb = len(X)
+    out_q, out_r, out_d = [], [], []
+    if nb and len(Q):
+        # block queries so the (blk, nb) distance matrix stays <=~128 MB
+        # however many queries probe this block
+        blk = max(1, (1 << 24) // nb)
+        # one C-contiguous transpose per block: dgemm reads it across
+        # every query block without re-packing
+        Xt = np.ascontiguousarray(X.T) if kk < nb else None
+        for s in range(0, len(Q), blk):
+            Qb = Q[s : s + blk]
+            B = len(Qb)
+            if kk < nb:
+                # in-place rank-1 updates: the naive expression
+                # materializes four (blk, nb) temporaries, and under
+                # 32-way worker parallelism the kernel is memory-
+                # bandwidth-bound — each avoided pass is wall time
+                d = Qb @ Xt
+                if metric == "cos":
+                    d /= qn[s : s + blk][:, None]
+                    d /= xn[None, :]
+                    np.subtract(1.0, d, out=d)
+                    margin = np.full(B, 2e-9)
+                else:
+                    d *= -2.0
+                    d += qn[s : s + blk][:, None]
+                    d += xn[None, :]
+                    margin = 2e-9 * (qn[s : s + blk] + float(xn.max()) + 1.0)
+                thr = np.partition(d, kk - 1, axis=1)[:, kk - 1]
+                qi, ri = np.nonzero(d <= (thr + margin)[:, None])
+            else:
+                # covering cut: every pair survives, no matmul needed
+                qi = np.repeat(np.arange(B), nb)
+                ri = np.tile(np.arange(nb), B)
+            qi = qi + s
+            dd = _pair_dist(X, Q, xn, qn, qi, ri, metric)
+            if kk < nb:
+                qi, ri, dd = _recut_ties(qi, ri, dd, kk)
+            out_q.append(qi)
+            out_r.append(ri)
+            out_d.append(dd)
+    if not out_q:
+        e = np.empty(0, dtype=np.int64)
+        return e, e, np.empty(0, dtype=np.float64)
+    qi, ri, d = np.concatenate(out_q), np.concatenate(out_r), np.concatenate(out_d)
+    if qsel is not None:
+        qi, ri = qsel[qi], xsel[ri]
+    return qi, ri, d
+
+
+def _adc_block_topk(codes, Q, books, bounds, kk: int, dgemm_min_dim: int):
+    """ADC-score one PQ code block against the queries ``Q`` that probe
+    it and keep each query's top ``kk`` (boundary ties kept) — the
+    scoring math of both ivfpq_search_df kernels (the executor route's
+    cogroup and the driver route's fused scan). Returns ``(qi, ri, d)``
+    like :func:`_flat_block_topk`; the distances are the EXACT adc_knn
+    values (pq.py: ``Σ LUT[s, code[s]]`` in f64) whichever cut route
+    runs.
+
+    QUERY-MAJOR (r11, same rewrite as the flat kernel): the
+    per-subvector LUT gather runs over ALL queries of a block at once
+    ((B, nb) per split, summed in place) and the top-kk cut is one
+    contiguous partition(axis=1) + one nonzero."""
+    splits = len(books)
+    nb = codes.shape[0]
+    dim = bounds[-1][1]
+    # decode-once + dgemm coarse cut (r13): ADC l2sq decomposes EXACTLY
+    # as ||q - decode(codes)||^2, so at wide dims the block decodes its
+    # codes to floats ONCE (nb x dim, amortized over every query probing
+    # the cluster) and the coarse cut rides the same blocked matmul as
+    # the flat kernel — the per-subvector gather-accumulate materializes
+    # `splits` (B, nb) temporaries and measured ~8x slower than the
+    # dgemm scan at 768d (ab_dim768_r13.json) while the r11 A/B showed
+    # it NON-dominant at 64d, hence the >=128d gate (the 64d path keeps
+    # its measured shape). The margin + exact f64 LUT rescore below
+    # keeps output rows and distances BIT-IDENTICAL either way, so the
+    # gate is a pure speed knob.
+    use_dgemm = kk < nb and dim >= dgemm_min_dim
+    if use_dgemm:
+        Xh = np.empty((nb, dim), dtype=np.float64)
+        for sv, ((lo, hi), book) in enumerate(zip(bounds, books)):
+            Xh[:, lo:hi] = book[codes[:, sv]]
+        XhT = np.ascontiguousarray(Xh.T)
+        xhn = (Xh**2).sum(1)
+    out_q, out_r, out_d = [], [], []
+    # block queries so the (B, nb) score matrix stays <=~128 MB
+    blk = max(1, (1 << 24) // max(nb, 1))
+    for s in range(0, len(Q), blk):
+        Qb = Q[s : s + blk]
+        if use_dgemm:
+            # dgemm coarse cut over the decoded block: cancellation
+            # error in qn - 2qx + xn is bounded by ~1e-16 x the NORMS,
+            # not the (possibly tiny) distance, so the superset margin
+            # scales with (|q|^2 + max|x|^2) — at 2e-9 relative it is
+            # ~1e7x the true fp error and still keeps the superset
+            # within ties of the exact cut. NO LUT build on this route:
+            # the (B, nclusters, dim) LUT pass costs ~nclusters/nb of the
+            # scan itself (26% at 977-row blocks) and the rescore below
+            # computes its few superset pairs directly from the
+            # codebooks.
+            qn2 = (Qb**2).sum(1)
+            d_apx = Qb @ XhT
+            d_apx *= -2.0
+            d_apx += qn2[:, None]
+            d_apx += xhn[None, :]
+            thr = np.partition(d_apx, kk - 1, axis=1)[:, kk - 1]
+            margin = 2e-9 * (qn2 + float(xhn.max()) + 1.0)
+            qi, ri = np.nonzero(d_apx <= (thr + margin)[:, None])
+            # exact f64 rescore of the margin superset, computed per
+            # pair from the codebooks: (book[code] - q_s)^2 summed over
+            # the subvector then accumulated in ascending-subvector
+            # order — the IDENTICAL ieee ops and order as the LUT-gather
+            # rescore (the LUT entry is the same 8-element sum), so rows
+            # and distances stay bit-identical across the route gate
+            d64 = None
+            for sv, ((lo, hi), book) in enumerate(zip(bounds, books)):
+                diff = book[codes[ri, sv]] - Qb[qi, lo:hi]
+                term = (diff**2).sum(1)
+                d64 = term if d64 is None else d64 + term
+        elif kk < nb:
+            # per-subvector f64 LUTs (tiny: splits x (B, nclusters)) —
+            # the gather cut scans them and the rescore re-reads them
+            luts = [
+                ((book[None, :, :] - Qb[:, lo:hi][:, None, :]) ** 2).sum(-1)
+                for (lo, hi), book in zip(bounds, books)
+            ]
+            # f32 coarse cut: the (B, nb) gather-accumulate is
+            # memory-bandwidth-bound under 32 parallel workers (the 20M
+            # smoke read 2775 s for this stage in f64 — SLOWER than the
+            # full-precision scan it exists to beat), so the scan runs
+            # at half the bytes and survivors are rescored in f64. A
+            # conservative relative margin on the f32 threshold keeps
+            # the survivor set a SUPERSET of the exact cut (f32
+            # accumulation of `splits` nonnegative terms errs < ~1e-6
+            # relative; margin is 1e-4), and the exact tie-inclusive
+            # re-cut below emits BIT-IDENTICAL rows and distances to an
+            # all-f64 pass. (an L2-cache-blocked variant of this
+            # accumulation was A/B'd in r11 at 20M/10k-q and measured
+            # FLAT, so the simpler form stays)
+            d32 = None
+            for sv in range(splits):
+                g = luts[sv].astype(np.float32)[:, codes[:, sv]]
+                if d32 is None:
+                    d32 = g
+                else:
+                    d32 += g
+            thr32 = np.partition(d32, kk - 1, axis=1)[:, kk - 1]
+            margin = np.float32(1e-4) * (np.abs(thr32) + np.float32(1.0))
+            qi, ri = np.nonzero(d32 <= (thr32 + margin)[:, None])
+            # exact f64 rescore of the margin superset — same
+            # ascending-subvector addition order as the f64
+            # accumulator, so values are bit-identical to it
+            d64 = luts[0][qi, codes[ri, 0]]
+            for sv in range(1, splits):
+                d64 = d64 + luts[sv][qi, codes[ri, sv]]
+        else:
+            # covering cut (every row survives): straight f64 pass
+            luts = [
+                ((book[None, :, :] - Qb[:, lo:hi][:, None, :]) ** 2).sum(-1)
+                for (lo, hi), book in zip(bounds, books)
+            ]
+            d = None
+            for sv in range(splits):
+                g = luts[sv][:, codes[:, sv]]
+                if d is None:
+                    d = g
+                else:
+                    d += g
+            B = d.shape[0]
+            qi = np.repeat(np.arange(B), nb)
+            ri = np.tile(np.arange(nb), B)
+            d64 = d[qi, ri]
+        if kk < nb:
+            # exact tie-inclusive re-cut of the superset
+            qi, ri, d64 = _recut_ties(qi, ri, d64, kk)
+        out_q.append(s + qi)
+        out_r.append(ri)
+        out_d.append(d64)
+    if not out_q:
+        e = np.empty(0, dtype=np.int64)
+        return e, e, np.empty(0, dtype=np.float64)
+    return np.concatenate(out_q), np.concatenate(out_r), np.concatenate(out_d)
+
+
+def _topk_by_query(q, ids, d, kk: int):
+    """Exact per-query cut: the first ``kk`` rows of each query in
+    (dist, id) order — the order of the global window, so no row it
+    drops can place in the final top-kk."""
+    order = np.lexsort((ids, d, q))
+    q, ids, d = q[order], ids[order], d[order]
+    starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
+    rank = np.arange(len(q)) - np.repeat(starts, np.diff(np.r_[starts, len(q)]))
+    keep = rank < kk
+    return q[keep], ids[keep], d[keep]
 
 
 def _per_row_qid_wrap(
@@ -411,6 +693,32 @@ _SALT_TARGET_BYTES = 32 << 20
 # larger stats keep the executor routing pass (queries never touch the
 # driver — the 100 TB posture).
 _DRIVER_ROUTE_MAX_QUERIES = 65_536
+# ... and whose f64 query matrix (rows x dim x 8) is at most this many
+# bytes: every fused-scan task receives that matrix through a broadcast,
+# so the gate bounds bytes, not rows (65,536 x 64d fits; a 65,536-row
+# frame of 128d or wider takes the executor route)
+_DRIVER_ROUTE_MAX_BYTES = 32 << 20
+# fused driver-route scan: (query, base row) pairs per scan task. The
+# task count is ceil(estimated pairs / this), clamped to
+# [1, defaultParallelism], so a small batch (autotune's 64 queries)
+# scans in one task and an eval-sized batch spreads over the cores.
+_FUSED_PAIRS_PER_TASK = 1 << 19
+
+
+def _base_rows_estimate(index: "IvfIndex") -> float | None:
+    """Row estimate of ``index.assigned`` from Catalyst statistics
+    (driver-side, no job): the rowCount when defined, else a float-array
+    estimate from the byte stats (the vector dominates); None when the
+    stats are unavailable."""
+    try:
+        dim = int(index.centroids.shape[1]) or 1
+        stats = index.assigned._jdf.queryExecution().optimizedPlan().stats()
+        rc = stats.rowCount()
+        if rc.isDefined():
+            return float(str(rc.get()))
+        return float(str(stats.sizeInBytes())) / max(dim * 4 + 16, 1)
+    except Exception:
+        return None
 
 
 def _adaptive_salt(index: "IvfIndex", salt_cap: int) -> int:
@@ -427,21 +735,198 @@ def _adaptive_salt(index: "IvfIndex", salt_cap: int) -> int:
     ivfdf.full_salt8 vs ivfdf.salt1). Row/size estimates come from
     Catalyst statistics (driver-side, no job); when stats are
     unavailable the cap (the old fixed behavior) applies."""
-    try:
-        dim = int(index.centroids.shape[1]) or 1
-        stats = index.assigned._jdf.queryExecution().optimizedPlan().stats()
-        rc = stats.rowCount()
-        if rc.isDefined():
-            rows = float(str(rc.get()))
-        else:
-            # float-array row estimate from byte stats (vec dominates)
-            rows = float(str(stats.sizeInBytes())) / max(dim * 4 + 16, 1)
-        block_bytes = rows / max(index.nlist, 1) * dim * 8.0
-        import math
+    import math
 
-        return max(1, min(int(salt_cap), math.ceil(block_bytes / _SALT_TARGET_BYTES)))
-    except Exception:  # stats unavailable: keep the caller's bound
+    rows = _base_rows_estimate(index)
+    if rows is None:  # stats unavailable: keep the caller's bound
         return int(salt_cap)
+    dim = int(index.centroids.shape[1]) or 1
+    block_bytes = rows / max(index.nlist, 1) * dim * 8.0
+    return max(1, min(int(salt_cap), math.ceil(block_bytes / _SALT_TARGET_BYTES)))
+
+
+def _fused_tasks(index: "IvfIndex", nq: int, np_eff: int) -> int:
+    """Scan-task count of the fused driver-route scan: the estimated
+    (query, base row) pair count nq·np_eff·rows/nlist over
+    ``_FUSED_PAIRS_PER_TASK``, clamped to [1, defaultParallelism]
+    (unknown stats: defaultParallelism)."""
+    import math
+
+    par = index.assigned.sparkSession.sparkContext.defaultParallelism
+    rows = _base_rows_estimate(index)
+    if rows is None:
+        return par
+    pairs = nq * np_eff * rows / max(index.nlist, 1)
+    return max(1, min(par, math.ceil(pairs / _FUSED_PAIRS_PER_TASK)))
+
+
+def _driver_route(
+    index: "IvfIndex", queries: DataFrame, q_id_col: str, q_vec_col: str,
+    np_eff: int, unique_q_ids: bool,
+):
+    """The shared driver route of ivf_search_df / ivfpq_search_df.
+
+    When Catalyst KNOWS the query frame's exact row count and both it
+    (``_DRIVER_ROUTE_MAX_QUERIES``) and the f64 query matrix
+    (``_DRIVER_ROUTE_MAX_BYTES``) are known-small, collect the frame
+    ONCE through Arrow, answer the dup/NULL q_id check on the collected
+    keys (count_distinct semantics: NULLs count as a problem, all NaNs
+    are one value), and route every query with :func:`_route_probes`
+    — the executor route's own math, so probes are bit-identical.
+
+    Returns None (take the executor route), ``"wrap"`` (duplicate or
+    NULL keys: answer per row through the surrogate wrap), or
+    ``(keys, qarr, probes)``; ``keys`` is empty for an empty frame."""
+    from lanterndb_spark.plans.shape import collect_keyed_matrix, estimated_rows
+
+    est = estimated_rows(queries)
+    dim = int(index.centroids.shape[1]) if index.centroids.ndim == 2 else 1
+    if (
+        est is None
+        or est > _DRIVER_ROUTE_MAX_QUERIES
+        or est * dim * 8 > _DRIVER_ROUTE_MAX_BYTES
+    ):
+        return None
+    keys, qarr = collect_keyed_matrix(
+        queries.select(F.col(q_id_col), F.col(q_vec_col).cast("array<double>"))
+    )
+    if not unique_q_ids:
+        if keys.dtype != object:
+            # no NULLs; np.unique counts all NaNs as one value
+            has_dup = len(np.unique(keys)) != len(keys)
+        else:
+            nonnull = [x for x in keys if x is not None]
+            if len(nonnull) != len(keys):
+                return "wrap"
+            try:
+                nans = sum(1 for x in nonnull if isinstance(x, float) and x != x)
+                dn = len({x for x in nonnull
+                          if not (isinstance(x, float) and x != x)})
+                has_dup = (dn + (1 if nans else 0)) != len(nonnull)
+            except TypeError:  # unhashable key type: fall back
+                from lanterndb_spark.operators.hnsw import _has_duplicate_qids
+
+                has_dup = _has_duplicate_qids(queries, q_id_col)
+        if has_dup:
+            return "wrap"
+    if not len(keys):
+        return keys, qarr, np.empty((0, np_eff), dtype=np.int64)
+    return keys, qarr, _route_probes(index.centroids, qarr, np_eff)
+
+
+def _fused_scan(
+    index: "IvfIndex", data: DataFrame, id_col: str, droute, np_eff: int,
+    kk: int, salt_eff: int, prepare, block_topk, out_schema: str,
+) -> DataFrame:
+    """The driver route's scan: ONE mapInPandas over the probed base
+    rows emits each query's top ``kk`` candidates of its scan task.
+
+    The base rows hash-repartition on (cluster_id, salt) into an
+    EXPLICIT task count (:func:`_fused_tasks`), which AQE does not
+    coalesce. The query matrix and the per-cluster probe lists (CSR:
+    the positions of the queries probing cluster c are
+    ``qpos[ptr[c]:ptr[c+1]]``) reach every task through one broadcast,
+    so no (query, cluster) relation is built or shuffled. The kernel
+    scores each cluster's rows of an Arrow batch against that cluster's
+    queries with ``block_topk`` (the same function the executor route's
+    cogroup kernel calls) and folds the blocks into a per-query top-kk
+    by (dist, id) over int32 query positions; the caller's window makes
+    the global cut.
+
+    ``prepare(pdf)`` turns a batch's payload columns into the array
+    ``block_topk(rows, Q)`` scores."""
+    keys, qarr, probes = droute
+    nq = len(keys)
+    flat = probes.reshape(-1)
+    order = np.argsort(flat, kind="stable")
+    qpos = np.repeat(np.arange(nq, dtype=np.int32), np_eff)[order]
+    ptr = np.r_[0, np.cumsum(np.bincount(flat, minlength=index.nlist))]
+    spark = data.sparkSession
+    bc = spark.sparkContext.broadcast((keys, qarr, ptr, qpos))
+    part = data.repartition(
+        _fused_tasks(index, nq, np_eff),
+        F.col("cluster_id"), F.pmod(F.hash(F.col(id_col)), F.lit(salt_eff)),
+    )
+
+    def scan(batches):
+        qkeys, Q, ptr_, qpos_ = bc.value
+        acc = None
+        watermark = 0  # size of acc right after its last cut
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            cl = pdf["cluster_id"].to_numpy()
+            ids = pdf[id_col].to_numpy()
+            rows = prepare(pdf)
+            by_cl = np.argsort(cl, kind="stable")
+            cs = cl[by_cl]
+            starts = np.flatnonzero(np.r_[True, cs[1:] != cs[:-1]])
+            parts = []
+            for lo, hi in zip(starts, np.r_[starts[1:], len(cs)]):
+                c = cs[lo]
+                qp = qpos_[ptr_[c] : ptr_[c + 1]]
+                if not len(qp):
+                    continue
+                blk = by_cl[lo:hi]
+                qi, ri, d = block_topk(rows[blk], Q[qp])
+                parts.append((qp[qi], blk[ri], d))
+            if not parts:
+                continue
+            q = np.concatenate([p[0] for p in parts])
+            r = np.concatenate([p[1] for p in parts])
+            d = np.concatenate([p[2] for p in parts])
+            cut = _topk_by_query(q, ids[r], d, kk)
+            if acc is None:
+                acc, watermark = cut, len(cut[0])
+                continue
+            acc = tuple(np.concatenate([a, b]) for a, b in zip(acc, cut))
+            if len(acc[0]) > 2 * watermark:
+                acc = _topk_by_query(*acc, kk)
+                watermark = max(len(acc[0]), 1)
+        if acc is not None:
+            q, i, d = _topk_by_query(*acc, kk)
+            yield pd.DataFrame({"__qid": qkeys[q], id_col: i, "dist": d})
+
+    return part.mapInPandas(scan, out_schema)
+
+
+def _cogroup_scan(
+    data: DataFrame, routed: DataFrame, id_col: str, kk: int,
+    salt_eff: int, prepare, block_topk, out_schema: str,
+) -> DataFrame:
+    """The executor route's scan: a SALTED cogroup of the base rows with
+    the routed (__qid, __q, cluster_id) rows — the base side of each
+    cluster splits ``salt_eff`` ways by a deterministic pmod of the id,
+    the routed side replicates per salt value — scoring each
+    (cluster, salt) block with ``block_topk`` (shared with
+    :func:`_fused_scan`), then the narrow per-partition pandas combiner
+    cuts each query to its top ``kk``."""
+    from lanterndb_spark.plans.shape import widen_partitions
+
+    base_s = widen_partitions(data).withColumn(
+        "__salt", F.pmod(F.hash(F.col(id_col)), F.lit(salt_eff)).cast("int")
+    )
+    routed_s = routed.withColumn(
+        "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_eff - 1)))
+    )
+
+    def score(key, bpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
+        if not len(bpdf) or not len(qpdf):
+            return pd.DataFrame({"__qid": [], id_col: [], "dist": []})
+        Q = np.asarray(qpdf["__q"].tolist(), dtype=np.float64)
+        qi, ri, d = block_topk(prepare(bpdf), Q)
+        return pd.DataFrame({
+            "__qid": qpdf["__qid"].to_numpy()[qi],
+            id_col: bpdf[id_col].to_numpy()[ri],
+            "dist": d,
+        })
+
+    return (
+        base_s.groupBy("cluster_id", "__salt")
+        .cogroup(routed_s.groupBy("cluster_id", "__salt"))
+        .applyInPandas(score, out_schema)
+        .mapInPandas(_partial_topk(kk, id_col), out_schema)
+    )
 
 
 def ivf_search_df(
@@ -477,13 +962,13 @@ def ivf_search_df(
        (q_id, query_vec, cluster_id) × nprobe. Same argsort order as
        :func:`ivf_search`, so per-query results are identical to the
        driver-list form by construction. No driver collect of queries
-       — EXCEPT when Catalyst knows the frame's exact row count is
-       ≤ 65,536 (r15): such batches collect once and route on the
-       driver with the identical numpy argsort, the prune stats and
-       dup/NULL check become driver-side lookups (zero jobs), and the
-       scoring kernel reads the query matrix from a broadcast while
-       the routed relation shrinks to (position, cluster) pairs.
-       Unknown or larger stats keep the executor pass.
+       — EXCEPT on the DRIVER ROUTE: when Catalyst knows the frame's
+       exact row count is ≤ 65,536 AND its f64 query matrix is
+       ≤ 32 MiB (r15; byte bound since the fused scan), the batch is
+       collected once through Arrow and routed on the driver with the
+       identical numpy argsort (blocked like the executor pass); the
+       prune stats and dup/NULL check become driver-side lookups
+       (zero jobs). Unknown or larger stats keep the executor pass.
     2. prune — the routed frame persists and a map-side-combined
        per-cluster count aggregates over the CACHE (so routing runs
        once; the scoring stage reuses the cached rows); the collected
@@ -494,46 +979,60 @@ def ivf_search_df(
        for free (every query emits exactly nprobe routed rows, so the
        counts sum to nq·nprobe). ``prune=False`` skips the pass (and
        the cache) when the batch is known to probe everything; the gate
-       then runs its own capped count.
+       then runs its own capped count. On the driver route the same
+       stats are a bincount over the driver's probe lists.
     3. score — two impls, routed by query density (``impl='auto'``):
 
        - ``expr``: shuffle equi-join base ⋈ routed on cluster_id (plain
          sort-merge/hash join — AQE's skew split covers hot clusters),
-         then the JVM-codegen ``distance`` expression. The query vector
-         rides the routed side so the distance is computable BEFORE any
-         q_id shuffle. Best at low queries-per-cluster: the pair count
-         is rows_probed × queries_per_cluster, and each pair pays an
-         interpreted array fold.
-       - ``arrow``: SALTED cogroup — the base side of each cluster
-         splits ``salt_eff`` ways (deterministic pmod of the id;
-         ``salt`` is the UPPER BOUND — the effective value adapts to
-         the estimated per-cluster block size via :func:`_adaptive_salt`
-         so a small base is not split into confetti tasks while the
-         100 TB tier keeps the full memory bound), the
-         routed side replicates per salt value, and each
+         then the JVM-side ``distance`` expression (an interpreted
+         per-element fold: ``zip_with``/``aggregate`` fall back from
+         codegen). The query vector rides the routed side so the
+         distance is computable BEFORE any q_id shuffle. Best at low
+         queries-per-cluster: the pair count is rows_probed ×
+         queries_per_cluster, and each pair pays that fold.
+       - ``arrow``, executor route: SALTED cogroup — the base side of
+         each cluster splits ``salt_eff`` ways (deterministic pmod of
+         the id; ``salt`` is the UPPER BOUND — the effective value
+         adapts to the estimated per-cluster block size via
+         :func:`_adaptive_salt` so a small base is not split into
+         confetti tasks while the 100 TB tier keeps the full memory
+         bound), the routed side replicates per salt value, and each
          (cluster, salt) task scores its base block against its
-         cluster's queries with ONE blocked numpy matmul + in-kernel
-         per-query top-k (np.partition threshold keeps boundary ties
-         for the exact window to resolve — same kernel contract as
-         ivf_search_batch's arrow path). The salt bounds per-task
-         memory at cluster_rows/salt regardless of cluster skew — the
-         reason a bare cogroup was rejected — and each task emits
-         ≤ k·(queries probing the cluster) rows, so the pair matrix
-         never hits the shuffle. l2sq + cos (cos = normalized matmul;
-         zero-norm rows and queries drop, mirroring the expr path's
-         NULL-dist filter); at 10k+ query batches this is the only
-         shape whose scoring cost is matmul flops instead of
-         interpreted folds.
+         cluster's queries with :func:`_flat_block_topk`: ONE blocked
+         numpy matmul + in-kernel per-query top-k (np.partition
+         threshold keeps boundary ties for the exact cut to resolve).
+         The salt bounds per-task memory at cluster_rows/salt
+         regardless of cluster skew — the reason a bare cogroup was
+         rejected — and each task emits ≤ k·(queries probing the
+         cluster) rows, so the pair matrix never hits the shuffle.
+         l2sq + cos (cos = normalized matmul; zero-norm rows and
+         queries drop, mirroring the expr path's NULL-dist filter); at
+         10k+ query batches this is the only shape whose scoring cost
+         is matmul flops instead of interpreted folds.
+       - ``arrow``, driver route: ONE fused ``mapInPandas`` over the
+         probed base rows (:func:`_fused_scan`) — no routed relation,
+         no cogroup. The base rows hash-repartition on
+         (cluster_id, salt) into an explicit task count sized from
+         the estimated pair count nq·nprobe·rows/nlist (2^19 pairs per
+         task, clamped to [1, defaultParallelism]; AQE does not
+         coalesce an explicit count), the query matrix and the
+         per-cluster probe lists arrive by broadcast, and each task
+         scores its per-cluster blocks with the SAME
+         :func:`_flat_block_topk` and folds them into a per-query top-k
+         by (dist, id) in numpy.
        - ``auto``: arrow when metric is l2sq/cos and a limit-capped
          probe shows ≥8 queries per probed cluster (nq ≥
          8·nlist/nprobe). The crossover is a density, not a volume —
          both impls' dominant costs scale with base rows, so base size
          cancels (measured at the 2M tier; DESIGN.md r9).
-    4. cut — a NARROW per-partition top-k combiner (pandas sort +
-       groupby-head, any q_id dtype) shrinks the final window shuffle
-       from (candidates) rows to ≤ (partitions × nq × k), then one
-       ``row_number`` window resolves the global per-query top-k with
-       the (dist, id) tie order shared by every batch path.
+    4. cut — the cogroup and expr shapes run a NARROW per-partition
+       top-k combiner (pandas sort + groupby-head, any q_id dtype) that
+       shrinks the final window shuffle from (candidates) rows to
+       ≤ (partitions × nq × k); the fused scan already emits at most
+       k rows per query per task. One ``row_number`` window then
+       resolves the global per-query top-k with the (dist, id) tie
+       order shared by every batch path.
 
     ``pred`` composes before scoring (filtered ANN,
     test/sql/hnsw_select.sql:50-51: the k budget goes to qualifying
@@ -602,58 +1101,21 @@ def ivf_search_df(
         )
 
     # KNOWN-SMALL query frames route on the DRIVER (r15, guide §4/§5 —
-    # the same single-collect pattern as knn_join's capped collect):
-    # when Catalyst KNOWS the frame's exact row count and it is at most
-    # _DRIVER_ROUTE_MAX_QUERIES, collect the queries ONCE and run the
-    # SAME ``((cents - q)**2).sum`` + ``np.argsort`` as _centroid_route
-    # — probe choice is bit-identical by construction — then answer the
-    # dup/NULL check, the prune stats, the density gate, and the probed
-    # set driver-side with NO job at all. The scoring kernel reads the
-    # query matrix from a broadcast and the routed relation shrinks to
-    # narrow (position, cluster) pairs, so the executor routing pass,
-    # its persist, and the rollup aggregate job all disappear (measured
-    # 1.57 s of ivfdf_2k's 2.3 s at bench scale). Unknown or large
-    # stats keep the executor path unchanged.
+    # the same single-collect pattern as knn_join's capped collect): see
+    # _driver_route. The dup/NULL check, the prune stats, the density
+    # gate, and the probed set are then driver-side lookups with NO job,
+    # and the arrow impl scores in the fused broadcast-query scan
+    # (_fused_scan). Unknown or large stats keep the executor path.
     droute = None
     if prune and np_eff < index.nlist:
-        from lanterndb_spark.plans.shape import estimated_rows
-
-        est = estimated_rows(queries)
-        if est is not None and est <= _DRIVER_ROUTE_MAX_QUERIES:
-            qrows = queries.select(
-                F.col(q_id_col), F.col(q_vec_col).cast("array<double>")
-            ).collect()
-            keys = [r[0] for r in qrows]
-            if not unique_q_ids:
-                # driver-side twin of _has_duplicate_qids over the
-                # collected keys (same semantics as knn_join's check):
-                # count_distinct skips NULLs, all NaNs are one value
-                nonnull = [x for x in keys if x is not None]
-                has_null = len(nonnull) != len(keys)
-                try:
-                    nans = sum(1 for x in nonnull
-                               if isinstance(x, float) and x != x)
-                    dn = len({x for x in nonnull
-                              if not (isinstance(x, float) and x != x)})
-                    has_dup = (dn + (1 if nans else 0)) != len(nonnull)
-                except TypeError:  # unhashable key type: fall back
-                    from lanterndb_spark.operators.hnsw import (
-                        _has_duplicate_qids,
-                    )
-
-                    has_dup = _has_duplicate_qids(queries, q_id_col)
-                    has_null = False  # the aggregate covers NULLs too
-                if has_dup or has_null:
-                    return _wrap()
-            if not qrows:
-                return spark.createDataFrame(
-                    [], f"{q_id_col} {q_id_type}, {id_col} {id_type}, "
-                        "dist double"
-                )
-            qarr = np.asarray([list(r[1]) for r in qrows], dtype=np.float64)
-            d = ((index.centroids[None, :, :] - qarr[:, None, :]) ** 2).sum(-1)
-            probes = np.argsort(d, axis=1)[:, :np_eff]
-            droute = (keys, qarr, probes)
+        droute = _driver_route(
+            index, queries, q_id_col, q_vec_col, np_eff, unique_q_ids)
+        if isinstance(droute, str):
+            return _wrap()
+        if droute is not None and not len(droute[0]):
+            return spark.createDataFrame(
+                [], f"{q_id_col} {q_id_type}, {id_col} {id_type}, dist double"
+            )
 
     # duplicate/NULL q_id detection: when the prune pass runs anyway, it
     # rides the SAME aggregate over the cached routed frame (every query
@@ -693,8 +1155,7 @@ def ivf_search_df(
     # column selection is deferred to the impl branch below: the arrow
     # kernel may scan a coded layout (base_decode) whose columns differ
     # from the expr path's float column, and selecting before the
-    # widen_partitions exchange is what keeps the unneeded one out of
-    # the shuffle
+    # exchange is what keeps the unneeded one out of the shuffle
     src = index.assigned
     if pred is not None:
         src = src.filter(pred)
@@ -705,8 +1166,7 @@ def ivf_search_df(
         # prune stats are a driver-side bincount over the routed probes
         # — no persist, no rollup job; the probed-cluster set and the
         # density gate come for free
-        keys, qarr, probes = droute
-        counts = np.bincount(probes.reshape(-1), minlength=index.nlist)
+        counts = np.bincount(droute[2].reshape(-1), minlength=index.nlist)
         probed = [int(c) for c in np.nonzero(counts)[0]]
         src = src.filter(F.col("cluster_id").isin(probed))
     elif prune and np_eff < index.nlist:
@@ -750,8 +1210,8 @@ def ivf_search_df(
 
     if impl == "auto":
         # the crossover is query DENSITY (queries per probed cluster) —
-        # below it the codegen expr join wins on latency, above it
-        # matmul flops beat interpreted per-pair folds
+        # below it the JVM expr join wins on latency, above it matmul
+        # flops beat interpreted per-pair folds
         if droute is not None:
             # every query emits exactly np_eff routed rows
             dense = (
@@ -772,144 +1232,49 @@ def ivf_search_df(
         impl = "arrow" if metric in ("l2sq", "cos") and dense else "expr"
     if impl == "arrow" and metric not in ("l2sq", "cos"):
         raise ValueError("impl='arrow' batch scoring implements l2sq and cos only")
-    if impl == "arrow" and base_decode is not None:
-        # coded scan: only the code columns cross the exchange and the
-        # Arrow boundary; the kernel decodes them in numpy
-        data = widen_partitions(src.select("cluster_id", id_col, *base_decode[0]))
-    else:
-        data = widen_partitions(src.select("cluster_id", id_col, index.vec_col))
+    cand_schema = f"__qid {q_id_type}, {id_col} {id_type}, dist double"
     if impl == "arrow":
         vec_col = index.vec_col
         decode_fn = base_decode[1] if base_decode is not None else None
         kk = int(k)
         salt_eff = _adaptive_salt(index, salt)
-        base_s = data.withColumn(
-            "__salt", F.pmod(F.hash(F.col(id_col)), F.lit(salt_eff)).cast("int")
+        # coded scan (base_decode): only the code columns cross the
+        # exchange and the Arrow boundary; the kernel decodes them
+        data = src.select(
+            "cluster_id", id_col,
+            *(base_decode[0] if base_decode is not None else [vec_col]),
         )
-        qbc = None
+
+        def prepare(bpdf):
+            if decode_fn is not None:
+                return decode_fn(bpdf)
+            return np.asarray(bpdf[vec_col].tolist(), dtype=np.float64)
+
+        def block_topk(X, Q):
+            return _flat_block_topk(X, Q, kk, metric)
+
         if droute is not None:
-            # narrow routed relation: (query position, cluster) pairs —
-            # the query VECTORS reach the kernel through one broadcast
-            # (the same task-closure pattern as knn_join's arrow path),
-            # so neither the routed exchange nor the Arrow boundary
-            # carries nq x nprobe vector copies
-            keys, qarr, probes = droute
-            nq = len(keys)
-            qkeys = np.empty(nq, dtype=object)
-            qkeys[:] = keys
-            qbc = spark.sparkContext.broadcast((qkeys, qarr))
-            routed_n = spark.createDataFrame(pd.DataFrame({
-                "__pos": np.repeat(
-                    np.arange(nq, dtype=np.int32), np_eff),
-                "cluster_id": probes.reshape(-1).astype(np.int32),
-            }))
-            routed_s = routed_n.withColumn(
-                "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_eff - 1)))
+            cand = _fused_scan(
+                index, data, id_col, droute, np_eff, kk, salt_eff,
+                prepare, block_topk, cand_schema,
             )
         else:
-            routed_s = routed.withColumn(
-                "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_eff - 1)))
+            cand = _cogroup_scan(
+                data, routed, id_col, kk, salt_eff, prepare, block_topk,
+                cand_schema,
             )
-
-        def score(key, bpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
-            # QUERY-MAJOR kernel (r11): the distance matrix is (queries,
-            # rows) so the per-query top-kk cut is ONE contiguous
-            # partition(axis=1) + ONE nonzero over the whole block — the
-            # previous row-major kernel cut with a per-query python loop
-            # (flatnonzero/repeat per column) plus a column-strided
-            # partition. Honest evidence state (r12, the r11 profile
-            # artifact was lost): at k=10 eval shapes the two kernels
-            # measure EQUAL (tools/ab_qmajor_r12.py vs the r10 kernel,
-            # spark-warehouse/ab_qmajor_r12*.json — small-k cuts are not
-            # the bottleneck); the rewrite's measured win is the LARGE-k
-            # coarse cut of the hybrid candidate stage (k=ef), where the
-            # r11 same-session profile halved 24.2 s -> 11.9 s at 2k
-            # queries over 2M (spark-warehouse/hybrid_profile_r11.json)
-            if not len(bpdf) or not len(qpdf):
-                return pd.DataFrame({"__qid": [], id_col: [], "dist": []})
-            if decode_fn is not None:
-                X = decode_fn(bpdf)
-            else:
-                X = np.asarray(bpdf[vec_col].tolist(), dtype=np.float64)
-            ids = bpdf[id_col].to_numpy()
-            if qbc is not None:
-                qk, qm = qbc.value
-                pos = qpdf["__pos"].to_numpy()
-                Q = qm[pos]
-                qids = qk[pos]
-            else:
-                Q = np.asarray(qpdf["__q"].tolist(), dtype=np.float64)
-                qids = qpdf["__qid"].to_numpy()
-            if metric == "cos":
-                # zero-norm rows/queries have undefined angle — drop,
-                # mirroring the expr path's NULL-dist filter
-                # (distance.py cos_dist convention)
-                xn = np.sqrt((X**2).sum(1))
-                live = xn > 0.0
-                X, ids, xn = X[live], ids[live], xn[live]
-                qn = np.sqrt((Q**2).sum(1))
-                qlive = qn > 0.0
-                Q, qids, qn = Q[qlive], qids[qlive], qn[qlive]
-                if not len(X) or not len(Q):
-                    return pd.DataFrame({"__qid": [], id_col: [], "dist": []})
-            else:
-                xn = (X**2).sum(1)
-            out_q, out_i, out_d = [], [], []
-            # block queries so the (blk, nb) distance matrix stays
-            # <=~128 MB however many queries probe this cluster
-            blk = max(1, (1 << 24) // max(len(X), 1))
-            nb = len(X)
-            # one C-contiguous transpose per key: dgemm reads it across
-            # every block without re-packing
-            Xt = np.ascontiguousarray(X.T)
-            for s in range(0, len(Q), blk):
-                Qb = Q[s : s + blk]
-                # in-place rank-1 updates: the naive expression
-                # materializes four (blk, nb) temporaries, and under
-                # 32-way worker parallelism the kernel is memory-
-                # bandwidth-bound — each avoided pass is wall time
-                d = Qb @ Xt
-                if metric == "cos":
-                    d /= qn[s : s + blk][:, None]
-                    d /= xn[None, :]
-                    np.subtract(1.0, d, out=d)
-                else:
-                    d *= -2.0
-                    d += (Qb**2).sum(1)[:, None]
-                    d += xn[None, :]
-                if kk < nb:
-                    thr = np.partition(d, kk - 1, axis=1)[:, kk - 1]
-                    qi, ri = np.nonzero(d <= thr[:, None])
-                else:
-                    B = d.shape[0]
-                    qi = np.repeat(np.arange(B), nb)
-                    ri = np.tile(np.arange(nb), B)
-                out_q.append(qids[s + qi])
-                out_i.append(ids[ri])
-                out_d.append(d[qi, ri])
-            return pd.DataFrame({
-                "__qid": np.concatenate(out_q),
-                id_col: np.concatenate(out_i),
-                "dist": np.concatenate(out_d),
-            })
-
-        cand = (
-            base_s.groupBy("cluster_id", "__salt")
-            .cogroup(routed_s.groupBy("cluster_id", "__salt"))
-            .applyInPandas(
-                score, f"__qid {q_id_type}, {id_col} {id_type}, dist double"
-            )
-        )
     else:
+        data = widen_partitions(src.select("cluster_id", id_col, index.vec_col))
         if droute is not None:
             # the expr join needs the vectors ON the routed rows (the
             # distance expression reads __q); a driver-built local
             # relation carries them — still no routing job, no persist,
             # no rollup
             keys, qarr, probes = droute
+            klist = keys.tolist()
             routed = spark.createDataFrame(
-                [(keys[i], [float(x) for x in qarr[i]], int(c))
-                 for i in range(len(keys)) for c in probes[i]],
+                [(klist[i], [float(x) for x in qarr[i]], int(c))
+                 for i in range(len(klist)) for c in probes[i]],
                 f"__qid {q_id_type}, __q array<double>, cluster_id int",
             )
         pairs = data.join(routed, on="cluster_id").withColumn(
@@ -918,14 +1283,11 @@ def ivf_search_df(
         # NULL dist (cos zero-norm, distance.py's convention) is
         # undefined order — drop, like hnsw_search_df drops zero-norm
         # queries
-        cand = pairs.select("__qid", id_col, "dist").filter(
-            F.col("dist").isNotNull()
+        cand = (
+            pairs.select("__qid", id_col, "dist")
+            .filter(F.col("dist").isNotNull())
+            .mapInPandas(_partial_topk(k, id_col), cand_schema)
         )
-
-    cand = cand.mapInPandas(
-        _partial_topk(k, id_col),
-        f"__qid {q_id_type}, {id_col} {id_type}, dist double",
-    )
     w = Window.partitionBy("__qid").orderBy(F.col("dist").asc(), F.col(id_col).asc())
     out = (
         cand.withColumn("__rn", F.row_number().over(w))
@@ -966,23 +1328,29 @@ def ivfpq_search_df(
 
     1. route — queries route to their ``nprobe`` nearest centroids
        executor-side (``_centroid_route``: same argsort as the
-       driver-list forms, unbounded batch). Catalyst-known frames of
-       ≤ 65,536 rows route on the DRIVER instead (r15, identical
-       argsort — see ``ivf_search_df``), folding the routing pass, the
-       persist, the distinct collect, and the duplicate-check job into
-       one collect.
+       driver-list forms, unbounded batch). Known-small frames (the
+       ``ivf_search_df`` driver-route gate: ≤ 65,536 rows and a
+       ≤ 32 MiB f64 query matrix) route on the DRIVER instead
+       (identical argsort), folding the routing pass, the persist, the
+       distinct collect, and the duplicate-check job into one Arrow
+       collect.
     2. prune — the routed frame persists (single evaluation of the
        queries lineage, like ``ivf_search_df``) and its per-cluster
        counts turn the probed union into a static ``isin`` the coded
-       scan pushes down.
-    3. ADC coarse — SALTED cogroup (per-task memory cluster_rows/salt,
-       the ``ivf_search_df`` arrow kernel's shape) where each
-       (cluster, salt) task builds the per-query LUT of
+       scan pushes down (a driver-side bincount on the driver route).
+    3. ADC coarse — :func:`_adc_block_topk` scores each code block
+       against the queries probing its cluster: the per-query LUT of
        (subvector × centroid) squared distances — the EXACT adc_knn
-       math (pq.py: ``Σ LUT[s, code[s]]``) — and gathers scores for
-       its code block, cutting to the per-query top ``k·refine`` with
-       boundary ties kept for the window. The scan that touches every
-       surviving row reads 1 byte/subvector, not 4·dim.
+       math (pq.py: ``Σ LUT[s, code[s]]``) — gathered over the block
+       and cut to the per-query top ``k·refine`` with boundary ties
+       kept. The executor route runs it in a SALTED cogroup (per-task
+       memory cluster_rows/salt, the ``ivf_search_df`` arrow shape)
+       followed by the narrow pandas combiner; the driver route runs
+       it in the fused broadcast-query scan (``ivf_search_df`` step 3,
+       :func:`_fused_scan`), which folds each task's blocks into a
+       per-query top ``k·refine``. A ``row_number`` window makes the
+       global coarse cut. The scan that touches every surviving row
+       reads 1 byte/subvector, not 4·dim.
     4. re-rank — candidates join their ORIGINAL query vectors by q_id
        and the raw base rows by id (≤ k·refine rows per query), one
        exact l2sq window resolves the final top-k.
@@ -1045,7 +1413,6 @@ def ivfpq_search_df(
 
     from lanterndb_spark.functions.distance import distance
     from lanterndb_spark.operators.pq import _codebook_arrays, subvector_bounds
-    from lanterndb_spark.plans.shape import widen_partitions
 
     if id_col is None:
         raise ValueError("ivfpq_search_df requires id_col (tie-break + output key)")
@@ -1075,49 +1442,20 @@ def ivfpq_search_df(
         )
 
     # KNOWN-SMALL query frames route on the DRIVER — the same gate,
-    # numpy formulation, and dup/NULL semantics as ivf_search_df's
-    # driver route (r15): the routing pass, its persist, the distinct
+    # collect, dup/NULL semantics and probes as ivf_search_df's driver
+    # route (_driver_route): the routing pass, its persist, the distinct
     # collect, AND the standalone duplicate-check job all fold into one
-    # collect of the (Catalyst-known ≤ 65,536-row) query frame.
+    # collect, and the ADC coarse pass runs as the fused scan.
     droute = None
     if prune and np_eff < index.nlist:
-        from lanterndb_spark.plans.shape import estimated_rows
-
-        est = estimated_rows(queries)
-        if est is not None and est <= _DRIVER_ROUTE_MAX_QUERIES:
-            qrows = queries.select(
-                F.col(q_id_col), F.col(q_vec_col).cast("array<double>")
-            ).collect()
-            keys = [r[0] for r in qrows]
-            if not unique_q_ids:
-                nonnull = [x for x in keys if x is not None]
-                has_null = len(nonnull) != len(keys)
-                try:
-                    nans = sum(1 for x in nonnull
-                               if isinstance(x, float) and x != x)
-                    dn = len({x for x in nonnull
-                              if not (isinstance(x, float) and x != x)})
-                    has_dup = (dn + (1 if nans else 0)) != len(nonnull)
-                except TypeError:  # unhashable key type: fall back
-                    from lanterndb_spark.operators.hnsw import (
-                        _has_duplicate_qids,
-                    )
-
-                    has_dup = _has_duplicate_qids(queries, q_id_col)
-                    has_null = False
-                if has_dup or has_null:
-                    return _wrap()
-            if not qrows:
-                return spark.createDataFrame(
-                    [], f"{q_id_col} {q_id_type}, {id_col} {id_type}, "
-                        "dist double"
-                )
-            qarr = np.asarray([list(r[1]) for r in qrows], dtype=np.float64)
-            dists = (
-                (index.centroids[None, :, :] - qarr[:, None, :]) ** 2
-            ).sum(-1)
-            probes = np.argsort(dists, axis=1)[:, :np_eff]
-            droute = (keys, qarr, probes)
+        droute = _driver_route(
+            index, queries, q_id_col, q_vec_col, np_eff, unique_q_ids)
+        if isinstance(droute, str):
+            return _wrap()
+        if droute is not None and not len(droute[0]):
+            return spark.createDataFrame(
+                [], f"{q_id_col} {q_id_type}, {id_col} {id_type}, dist double"
+            )
     if not unique_q_ids and droute is None:
         from lanterndb_spark.operators.hnsw import _has_duplicate_qids
 
@@ -1150,8 +1488,7 @@ def ivfpq_search_df(
     cached_routed = None
     probed = None
     if droute is not None:
-        keys, qarr, probes = droute
-        counts = np.bincount(probes.reshape(-1), minlength=index.nlist)
+        counts = np.bincount(droute[2].reshape(-1), minlength=index.nlist)
         probed = [int(c) for c in np.nonzero(counts)[0]]
         base = base.filter(F.col("cluster_id").isin(probed))
     elif prune and np_eff < index.nlist:
@@ -1162,204 +1499,26 @@ def ivfpq_search_df(
         ]  # bounded: <= nlist rows
         routed = cached_routed
         base = base.filter(F.col("cluster_id").isin(probed))
-    data = widen_partitions(base)
-
     salt_eff = _adaptive_salt(index, salt)
-    base_s = data.withColumn(
-        "__salt", F.pmod(F.hash(F.col(id_col)), F.lit(salt_eff)).cast("int")
-    )
-    qbc = None
+    cand_schema = f"__qid {q_id_type}, {id_col} {id_type}, dist double"
+
+    def prepare(bpdf):
+        return np.asarray(bpdf[pq_col].tolist(), dtype=np.int64)
+
+    def block_topk(codes, Q):
+        bks, bnds = bc_books.value
+        return _adc_block_topk(codes, Q, bks, bnds, kk, adc_dgemm_min_dim)
+
     if droute is not None:
-        keys, qarr, probes = droute
-        nq = len(keys)
-        qkeys = np.empty(nq, dtype=object)
-        qkeys[:] = keys
-        qbc = spark.sparkContext.broadcast((qkeys, qarr))
-        routed_n = spark.createDataFrame(pd.DataFrame({
-            "__pos": np.repeat(np.arange(nq, dtype=np.int32), np_eff),
-            "cluster_id": probes.reshape(-1).astype(np.int32),
-        }))
-        routed_s = routed_n.withColumn(
-            "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_eff - 1)))
+        cand = _fused_scan(
+            index, base, id_col, droute, np_eff, kk, salt_eff,
+            prepare, block_topk, cand_schema,
         )
     else:
-        routed_s = routed.withColumn(
-            "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_eff - 1)))
+        cand = _cogroup_scan(
+            base, routed, id_col, kk, salt_eff, prepare, block_topk,
+            cand_schema,
         )
-
-    def score(key, bpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
-        # QUERY-MAJOR ADC kernel (r11, same rewrite as ivf_search_df's):
-        # the per-subvector LUT gather runs over ALL queries of a block
-        # at once ((B, nb) per split, summed in place) and the top-kk
-        # cut is one contiguous partition(axis=1) + one nonzero — the
-        # previous kernel rebuilt a (splits, nclusters) table and cut
-        # per QUERY in python, the loop the 2M profile showed dominating
-        if not len(bpdf) or not len(qpdf):
-            return pd.DataFrame({"__qid": [], id_col: [], "dist": []})
-        bks, bnds = bc_books.value
-        codes = np.asarray(bpdf[pq_col].tolist(), dtype=np.int64)
-        ids = bpdf[id_col].to_numpy()
-        if qbc is not None:
-            qk, qm = qbc.value
-            pos = qpdf["__pos"].to_numpy()
-            Q = qm[pos]
-            qids = qk[pos]
-        else:
-            Q = np.asarray(qpdf["__q"].tolist(), dtype=np.float64)
-            qids = qpdf["__qid"].to_numpy()
-        splits = len(bks)
-        nb = codes.shape[0]
-        dim = bnds[-1][1]
-        # decode-once + dgemm coarse cut (r13): ADC l2sq decomposes
-        # EXACTLY as ||q - decode(codes)||^2, so at wide dims the block
-        # decodes its codes to floats ONCE (nb x dim, amortized over
-        # every query probing the cluster) and the coarse cut rides the
-        # same blocked matmul as ivf_search_df's kernel — the
-        # per-subvector gather-accumulate materializes `splits` (B, nb)
-        # temporaries and measured ~8x slower than the dgemm scan at
-        # 768d (ab_dim768_r13.json) while the r11 A/B showed it
-        # NON-dominant at 64d, hence the >=128d gate (the 64d path
-        # keeps its measured shape). The margin + exact f64 LUT rescore
-        # below keeps output rows and distances BIT-IDENTICAL either
-        # way, so the gate is a pure speed knob.
-        use_dgemm = kk < nb and dim >= adc_dgemm_min_dim
-        if use_dgemm:
-            Xh = np.empty((nb, dim), dtype=np.float64)
-            for sv, ((lo, hi), book) in enumerate(zip(bnds, bks)):
-                Xh[:, lo:hi] = book[codes[:, sv]]
-            XhT = np.ascontiguousarray(Xh.T)
-            xhn = (Xh**2).sum(1)
-        out_q, out_i, out_d = [], [], []
-        # block queries so the (B, nb) score matrix stays <=~128 MB
-        blk = max(1, (1 << 24) // max(nb, 1))
-        for s in range(0, len(Q), blk):
-            Qb = Q[s : s + blk]
-            if kk < nb and use_dgemm:
-                # dgemm coarse cut over the decoded block (see the
-                # decode comment above the loop): cancellation error in
-                # qn - 2qx + xn is bounded by ~1e-16 x the NORMS, not
-                # the (possibly tiny) distance, so the superset margin
-                # scales with (|q|^2 + max|x|^2) — at 2e-9 relative it
-                # is ~1e7x the true fp error and still keeps the
-                # superset within ties of the exact cut. NO LUT build
-                # on this route: the (B, nclusters, dim) LUT pass costs
-                # ~nclusters/nb of the scan itself (26% at 977-row
-                # blocks) and the rescore below computes its few
-                # superset pairs directly from the codebooks.
-                qn2 = (Qb**2).sum(1)
-                d_apx = Qb @ XhT
-                d_apx *= -2.0
-                d_apx += qn2[:, None]
-                d_apx += xhn[None, :]
-                thr = np.partition(d_apx, kk - 1, axis=1)[:, kk - 1]
-                margin = 2e-9 * (qn2 + float(xhn.max()) + 1.0)
-                qi, ri = np.nonzero(d_apx <= (thr + margin)[:, None])
-                # exact f64 rescore of the margin superset, computed
-                # per pair from the codebooks: (book[code] - q_s)^2
-                # summed over the subvector then accumulated in
-                # ascending-subvector order — the IDENTICAL ieee ops
-                # and order as the LUT-gather rescore (the LUT entry is
-                # the same 8-element sum), so rows and distances stay
-                # bit-identical across the route gate
-                d64 = None
-                for sv, ((lo, hi), book) in enumerate(zip(bnds, bks)):
-                    diff = book[codes[ri, sv]] - Qb[qi, lo:hi]
-                    term = (diff**2).sum(1)
-                    d64 = term if d64 is None else d64 + term
-                order = np.lexsort((ri, d64, qi))
-                qi, ri, d64 = qi[order], ri[order], d64[order]
-                starts = np.flatnonzero(np.r_[True, qi[1:] != qi[:-1]])
-                runs = np.diff(np.r_[starts, len(qi)])
-                kth = starts + np.minimum(kk, runs) - 1
-                thr64 = np.repeat(d64[kth], runs)
-                keep = d64 <= thr64
-                qi, ri, d64 = qi[keep], ri[keep], d64[keep]
-            elif kk < nb:
-                # per-subvector f64 LUTs (tiny: splits x (B, nclusters))
-                # — the gather cut scans them and the rescore re-reads
-                # them; the dgemm route above skips the build entirely
-                luts = [
-                    ((book[None, :, :] - Qb[:, lo:hi][:, None, :]) ** 2).sum(-1)
-                    for (lo, hi), book in zip(bnds, bks)
-                ]
-                # f32 coarse cut: the (B, nb) gather-accumulate is
-                # memory-bandwidth-bound under 32 parallel workers (the
-                # 20M smoke read 2775 s for this stage in f64 — SLOWER
-                # than the full-precision scan it exists to beat), so
-                # the scan runs at half the bytes and survivors are
-                # rescored in f64. A conservative relative margin on
-                # the f32 threshold keeps the survivor set a SUPERSET
-                # of the exact cut (f32 accumulation of `splits`
-                # nonnegative terms errs < ~1e-6 relative; margin is
-                # 1e-4), and the exact tie-inclusive re-cut below emits
-                # BIT-IDENTICAL rows and distances to an all-f64 pass.
-                # (an L2-cache-blocked variant of this accumulation —
-                # chunking columns so the (B, cblk) accumulator stays
-                # resident across the 8 gathers — was A/B'd in r11 at
-                # 20M/10k-q and measured FLAT: 126-150 s vs 130.8 s
-                # unblocked; at nprobe=32 the coarse gather no longer
-                # dominates the end-to-end, so the simpler form stays)
-                d32 = None
-                for sv in range(splits):
-                    g = luts[sv].astype(np.float32)[:, codes[:, sv]]
-                    if d32 is None:
-                        d32 = g
-                    else:
-                        d32 += g
-                thr32 = np.partition(d32, kk - 1, axis=1)[:, kk - 1]
-                margin = np.float32(1e-4) * (np.abs(thr32) + np.float32(1.0))
-                qi, ri = np.nonzero(d32 <= (thr32 + margin)[:, None])
-                # exact f64 rescore of the margin superset — same
-                # ascending-subvector addition order as the f64
-                # accumulator, so values are bit-identical to it
-                d64 = luts[0][qi, codes[ri, 0]]
-                for sv in range(1, splits):
-                    d64 = d64 + luts[sv][qi, codes[ri, sv]]
-                order = np.lexsort((ri, d64, qi))
-                qi, ri, d64 = qi[order], ri[order], d64[order]
-                starts = np.flatnonzero(np.r_[True, qi[1:] != qi[:-1]])
-                runs = np.diff(np.r_[starts, len(qi)])
-                kth = starts + np.minimum(kk, runs) - 1
-                thr64 = np.repeat(d64[kth], runs)
-                keep = d64 <= thr64
-                qi, ri, d64 = qi[keep], ri[keep], d64[keep]
-            else:
-                # covering cut (every row survives): straight f64 pass
-                luts = [
-                    ((book[None, :, :] - Qb[:, lo:hi][:, None, :]) ** 2).sum(-1)
-                    for (lo, hi), book in zip(bnds, bks)
-                ]
-                d = None
-                for sv in range(splits):
-                    g = luts[sv][:, codes[:, sv]]
-                    if d is None:
-                        d = g
-                    else:
-                        d += g
-                B = d.shape[0]
-                qi = np.repeat(np.arange(B), nb)
-                ri = np.tile(np.arange(nb), B)
-                d64 = d[qi, ri]
-            out_q.append(qids[s + qi])
-            out_i.append(ids[ri])
-            out_d.append(d64)
-        return pd.DataFrame({
-            "__qid": np.concatenate(out_q),
-            id_col: np.concatenate(out_i),
-            "dist": np.concatenate(out_d),
-        })
-
-    cand = (
-        base_s.groupBy("cluster_id", "__salt")
-        .cogroup(routed_s.groupBy("cluster_id", "__salt"))
-        .applyInPandas(
-            score, f"__qid {q_id_type}, {id_col} {id_type}, dist double"
-        )
-    )
-    cand = cand.mapInPandas(
-        _partial_topk(kk, id_col),
-        f"__qid {q_id_type}, {id_col} {id_type}, dist double",
-    )
     w = Window.partitionBy("__qid").orderBy(
         F.col("dist").asc(), F.col(id_col).asc()
     )
@@ -1729,7 +1888,7 @@ def ivf_search_batch(
         # query vectors — fixed driver/plan latency that dominates at
         # this size. Each query becomes one struct of (q_id, distance to
         # a PARSED literal array, its own cluster-eligibility isin);
-        # explode + filter replaces the join, all codegen, one scan.
+        # explode + filter replaces the join, all JVM-side, one scan.
         # Measured (interleaved medians, sf0.1): nq=1 0.77->0.46 s,
         # nq=2 0.70->0.56, nq=3 0.75->0.61; rows identical. Non-finite
         # query values (repr would not parse as SQL literals) keep the

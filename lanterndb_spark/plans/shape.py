@@ -158,6 +158,49 @@ def estimated_rows(df: DataFrame) -> float | None:
         return None
 
 
+def collect_keyed_matrix(df: DataFrame, dtype=None):
+    """Collect a known-small two-column (key, array) frame through Arrow
+    (``DataFrame.toArrow``, which does not depend on the
+    ``spark.sql.execution.arrow.pyspark.enabled`` conf) as
+    ``(keys, matrix)``.
+
+    ``keys`` is a numpy array of the column's own dtype when it has no
+    NULLs and is numeric or string, else an object array of Python
+    values (NULL -> None). ``matrix`` is the (rows, len) array of
+    ``dtype`` (default float64) read straight from the list column's
+    flat values; a column with NULL vectors, NULL elements or ragged
+    lengths converts row by row with ``np.asarray([list(v) ...])``,
+    which raises or fills exactly as converting collected Rows did."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    dtype = dtype or np.float64
+    t = df.toArrow()
+    kcol, vcol = t.column(0), t.column(1).combine_chunks()
+    kt = kcol.type
+    if kcol.null_count == 0 and (
+        pa.types.is_integer(kt) or pa.types.is_floating(kt)
+        or pa.types.is_string(kt) or pa.types.is_large_string(kt)
+    ):
+        keys = kcol.to_numpy()
+    else:
+        vals = kcol.to_pylist()
+        keys = np.empty(len(vals), dtype=object)
+        for i, v in enumerate(vals):
+            keys[i] = v
+    n = len(vcol)
+    if not n:
+        return keys, np.zeros((0, 0), dtype=dtype)
+    flat = vcol.flatten()
+    lens = pc.list_value_length(vcol)
+    width = pc.min_max(lens)
+    w = width["max"].as_py()
+    if vcol.null_count == 0 and flat.null_count == 0 and width["min"].as_py() == w:
+        return keys, flat.to_numpy().astype(dtype, copy=False).reshape(n, w)
+    return keys, np.asarray([list(v) for v in vcol.to_pylist()], dtype=dtype)
+
+
 def coalesce_known_small(
     df: DataFrame, stats_of: DataFrame, rows_per_task: int = 1024
 ) -> DataFrame:

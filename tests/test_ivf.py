@@ -1,3 +1,4 @@
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -1215,3 +1216,297 @@ def test_search_df_driver_route_matches_executor_route(tables, spark):
     for df in (qdf, dup, uniq, assigned_pq):
         df.unpersist()
     idx.assigned.unpersist()
+
+
+def _search_rows(fn, executor=False):
+    """Collect a batch search's rows as sorted (q_id, id, dist-9dp)
+    tuples; ``executor=True`` disables the driver route for the call."""
+    from lanterndb_spark.operators import ivf as ivfmod
+    from lanterndb_spark.plans.shape import release
+
+    old = ivfmod._DRIVER_ROUTE_MAX_QUERIES
+    if executor:
+        ivfmod._DRIVER_ROUTE_MAX_QUERIES = 0
+    try:
+        out = fn()
+        rows = sorted((r[0], r[1], round(r[2], 9)) for r in out.collect())
+    finally:
+        ivfmod._DRIVER_ROUTE_MAX_QUERIES = old
+    release(out)
+    return rows
+
+
+def _stage_tasks(sc, fn):
+    """Tasks run by each stage of the jobs ``fn`` ran (stages a job
+    lists but skips, e.g. a cached frame's shuffle, run none)."""
+    st = sc.statusTracker()
+    sc.parallelize([0], 1).count()
+    before = max(st.getJobIdsForGroup())
+    fn()
+    sc.parallelize([0], 1).count()
+    after = max(st.getJobIdsForGroup())
+    sids = {sid for jid in range(before + 1, after)
+            for sid in st.getJobInfo(jid).stageIds}
+    infos = [st.getStageInfo(sid) for sid in sorted(sids)]
+    # a skipped stage old enough to have left the status store is None
+    return [i.numCompletedTasks for i in infos if i and i.numCompletedTasks]
+
+
+@pytest.fixture(scope="module")
+def droute_setup(tables, spark):
+    """An nlist=8 ivf index, its PQ-coded twin, and a 24-query frame
+    whose exact row count Catalyst knows (driver route)."""
+    from lanterndb_spark.operators.ivf import IvfIndex
+    from lanterndb_spark.operators.pq import quantize, train_codebook
+
+    emb = tables["embeddings"]
+    idx = build_ivf(emb, "embedding", nlist=8, seed=42)
+    idx.assigned.cache().count()
+    cb = train_codebook(emb, "embedding", splits=4, clusters=8, seed=1)
+    coded = quantize(idx.assigned, "embedding", cb).cache()
+    coded.count()
+    qs = [(i, [float(x) for x in r["embedding"]])
+          for i, r in enumerate(emb.limit(24).collect())]
+    qdf = spark.createDataFrame(qs, "q_id int, query array<double>").persist()
+    qdf.count()
+    yield idx, IvfIndex(coded, idx.centroids, "embedding"), cb, qdf
+    for df in (qdf, coded, idx.assigned):
+        df.unpersist()
+
+
+def test_fused_scan_multi_task_matches_executor_route(droute_setup, spark, monkeypatch):
+    """A driver-routed batch whose fused scan runs in more than one
+    task (pairs-per-task forced to 1) returns the executor route's rows,
+    for ivf AND ivfpq, and the explicit task count survives AQE."""
+    from lanterndb_spark.operators import ivf as ivfmod
+    from lanterndb_spark.operators.ivf import ivf_search_df, ivfpq_search_df
+
+    idx, pq_idx, cb, qdf = droute_setup
+    monkeypatch.setattr(ivfmod, "_FUSED_PAIRS_PER_TASK", 1)
+    par = spark.sparkContext.defaultParallelism
+    assert par > 1 and ivfmod._fused_tasks(idx, 24, 3) == par
+    body = lambda: ivf_search_df(
+        idx, qdf, k=5, nprobe=3, id_col="vec_id", impl="arrow")
+    want = _search_rows(body, executor=True)
+    assert _search_rows(body) == want and want
+    assert max(_stage_tasks(spark.sparkContext,
+                            lambda: _search_rows(body))) == par
+    body_pq = lambda: ivfpq_search_df(
+        pq_idx, cb, qdf, k=5, nprobe=3, refine=3, id_col="vec_id")
+    want = _search_rows(body_pq, executor=True)
+    assert _search_rows(body_pq) == want and want
+
+
+def test_fused_scan_ivfsq_matches_executor_route(droute_setup):
+    """ivfsq's coded scan (base_decode) through the fused scan returns
+    the executor route's rows."""
+    from lanterndb_spark.operators.ivf import IvfIndex, ivfsq_search_df
+    from lanterndb_spark.operators.sq import sq8_quantize
+
+    idx, _pq, _cb, qdf = droute_setup
+    coded = IvfIndex(sq8_quantize(idx.assigned, "embedding"),
+                     idx.centroids, "embedding")
+    body = lambda: ivfsq_search_df(
+        coded, qdf, k=5, nprobe=3, refine=3, id_col="vec_id", impl="arrow")
+    want = _search_rows(body, executor=True)
+    assert _search_rows(body) == want and want
+
+
+def test_fused_scan_duplicate_base_vectors_at_kth_distance(tables, spark):
+    """Every base vector twice (second copy id + 100000): each query's
+    k-th and (k+1)-th rows tie on distance, and only the id decides
+    which copy makes the cut. Both routes keep the same rows, ivf and
+    ivfpq alike, in one task and in several."""
+    from lanterndb_spark.operators import ivf as ivfmod
+    from lanterndb_spark.operators.ivf import ivf_search_df, ivfpq_search_df
+    from lanterndb_spark.operators.pq import quantize, train_codebook
+
+    emb = tables["embeddings"].select("vec_id", "embedding")
+    built = build_ivf(emb, "embedding", nlist=8, seed=42)
+    cb = train_codebook(emb, "embedding", splits=4, clusters=8, seed=1)
+    # twins copy the assigned, coded row: same cluster, same codes
+    coded = quantize(built.assigned, "embedding", cb).cache()
+    coded.count()
+    twins = coded.unionByName(
+        coded.withColumn("vec_id", F.col("vec_id") + 100000)).cache()
+    twins.count()
+    idx = ivfmod.IvfIndex(twins, built.centroids, "embedding")
+    qs = [(i, [float(x) + 0.01 for x in r["embedding"]])
+          for i, r in enumerate(emb.limit(16).collect())]
+    qdf = spark.createDataFrame(qs, "q_id int, query array<double>").persist()
+    qdf.count()
+    body = lambda: ivf_search_df(
+        idx, qdf, k=5, nprobe=3, id_col="vec_id", impl="arrow")
+    body_pq = lambda: ivfpq_search_df(
+        idx, cb, qdf, k=5, nprobe=3, refine=1, id_col="vec_id")
+    old = ivfmod._FUSED_PAIRS_PER_TASK
+    try:
+        for fn in (body, body_pq):
+            want = _search_rows(fn, executor=True)
+            if fn is body:
+                # ranks (1,2), (3,4) are twin pairs; rank 5 keeps the
+                # lower id of its pair and the twin falls past the cut
+                by_q = {}
+                for q, i, d in want:
+                    by_q.setdefault(q, []).append((d, i))
+                for rows in by_q.values():
+                    rows.sort()
+                    d5, i5 = rows[4]
+                    assert i5 < 100000 and rows[3][0] < d5, rows
+                    assert i5 + 100000 not in {i for _d, i in rows}, rows
+            for per_task in (old, 1):
+                ivfmod._FUSED_PAIRS_PER_TASK = per_task
+                assert _search_rows(fn) == want
+    finally:
+        ivfmod._FUSED_PAIRS_PER_TASK = old
+    for df in (qdf, twins, coded):
+        df.unpersist()
+
+
+def test_driver_routed_plan_has_no_cogroup(droute_setup):
+    """The driver route's arrow scan is one MapInPandas over the probed
+    base rows; only the executor route plans a cogroup."""
+    from lanterndb_spark.operators import ivf as ivfmod
+    from lanterndb_spark.operators.ivf import ivf_search_df, ivfpq_search_df
+
+    idx, pq_idx, cb, qdf = droute_setup
+
+    def plan(fn):
+        return fn()._jdf.queryExecution().executedPlan().toString()
+
+    for fn in (
+        lambda: ivf_search_df(idx, qdf, k=5, nprobe=3, id_col="vec_id",
+                              impl="arrow", unique_q_ids=True),
+        lambda: ivfpq_search_df(pq_idx, cb, qdf, k=5, nprobe=3, refine=3,
+                                id_col="vec_id", unique_q_ids=True),
+    ):
+        p = plan(fn)
+        assert "FlatMapCoGroupsInPandas" not in p and "MapInPandas" in p
+        old = ivfmod._DRIVER_ROUTE_MAX_QUERIES
+        ivfmod._DRIVER_ROUTE_MAX_QUERIES = 0
+        try:
+            assert "FlatMapCoGroupsInPandas" in plan(fn)
+        finally:
+            ivfmod._DRIVER_ROUTE_MAX_QUERIES = old
+
+
+def test_fused_scan_small_batch_runs_in_one_task(tables, spark):
+    """A 64-query batch (autotune's size) over a one-partition base
+    runs every stage — the fused scan included — in one task."""
+    from lanterndb_spark.operators.ivf import ivf_search_df
+
+    emb = tables["embeddings"].select("vec_id", "embedding").coalesce(1)
+    idx = build_ivf(emb, "embedding", nlist=8, seed=42)
+    idx.assigned.cache().count()
+    qs = [(i, [float(x) for x in r["embedding"]])
+          for i, r in enumerate(emb.limit(64).collect())]
+    qdf = spark.createDataFrame(
+        qs, "q_id int, query array<double>").repartition(1).persist()
+    qdf.count()
+    body = lambda: ivf_search_df(idx, qdf, k=5, nprobe=3, id_col="vec_id",
+                                 impl="arrow", unique_q_ids=True)
+    tasks = _stage_tasks(spark.sparkContext, lambda: _search_rows(body))
+    assert tasks and max(tasks) == 1, tasks
+    qdf.unpersist()
+    idx.assigned.unpersist()
+
+
+def test_driver_route_byte_bound_sends_wide_frames_to_executor(spark):
+    """The driver-route gate bounds the query matrix's bytes: a known
+    65,536-row frame routes on the driver at 64d but not at 128d."""
+    from lanterndb_spark.operators.ivf import IvfIndex, _driver_route
+
+    def frame(dim):
+        return spark.range(65536).select(
+            F.col("id").cast("int").alias("q_id"),
+            F.array_repeat(F.lit(0.5), dim).alias("query"),
+        )
+
+    def index(dim):
+        cents = np.random.default_rng(0).normal(size=(4, dim))
+        base = spark.createDataFrame(
+            [(0, [0.0] * dim, 0)], "vec_id int, embedding array<double>, cluster_id int")
+        return IvfIndex(base, cents, "embedding")
+
+    assert _driver_route(index(128), frame(128), "q_id", "query", 2, True) is None
+    keys, qarr, probes = _driver_route(index(64), frame(64), "q_id", "query", 2, True)
+    assert qarr.shape == (65536, 64) and probes.shape == (65536, 2)
+
+
+def test_blocked_route_probes_equal_unblocked(monkeypatch):
+    """Centroid scoring in small blocks picks exactly the probes of one
+    unblocked (nq, nlist, dim) pass."""
+    from lanterndb_spark.operators import ivf as ivfmod
+
+    rng = np.random.default_rng(7)
+    cents = rng.normal(size=(16, 24))
+    Q = rng.normal(size=(101, 24))
+    Q[50] = cents[3] + 1e-13  # near-ties against centroid 3
+    full = np.argsort(((cents[None, :, :] - Q[:, None, :]) ** 2).sum(-1), axis=1)[:, :5]
+    monkeypatch.setattr(ivfmod, "_ROUTE_BLOCK_ELEMS", 16 * 24 * 7)
+    assert ivfmod._route_block(cents) == 7
+    assert np.array_equal(ivfmod._route_probes(cents, Q, 5), full)
+
+
+def test_driver_routes_identical_with_arrow_conf_off(droute_setup, tables, spark):
+    """spark.sql.execution.arrow.pyspark.enabled is a runtime conf the
+    caller may flip: driver-routed ivf, ivfpq and hnsw batch searches
+    return the same rows with it off as with it on."""
+    from lanterndb_spark.operators.hnsw import build_hnsw, hnsw_search_df
+    from lanterndb_spark.operators.ivf import ivf_search_df, ivfpq_search_df
+
+    idx, pq_idx, cb, qdf = droute_setup
+    hidx = build_hnsw(tables["embeddings"], "embedding", id_col="vec_id",
+                      m=8, ef_construction=32, num_shards=4, seed=42,
+                      routing="cluster")
+    qlong = qdf.select(F.col("q_id").cast("long").alias("q_id"), "query").persist()
+    qlong.count()
+    bodies = [
+        lambda: ivf_search_df(idx, qdf, k=5, nprobe=3, id_col="vec_id", impl="arrow"),
+        lambda: ivf_search_df(idx, qdf, k=5, nprobe=3, id_col="vec_id", impl="expr"),
+        lambda: ivfpq_search_df(pq_idx, cb, qdf, k=5, nprobe=3, refine=3,
+                                id_col="vec_id"),
+        lambda: hnsw_search_df(hidx, qlong, k=5, ef=32),
+        lambda: hnsw_search_df(hidx, qlong, k=5, ef=32, nprobe=2),
+    ]
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "true")
+        on = [_search_rows(b) for b in bodies]
+        spark.conf.set(conf, "false")
+        off = [_search_rows(b) for b in bodies]
+    finally:
+        spark.conf.set(conf, old)
+    for i, (a, b) in enumerate(zip(on, off)):
+        assert a == b and a, i
+    qlong.unpersist()
+    hidx.graphs.unpersist()
+
+
+def test_collect_keyed_matrix_matches_row_collect(spark):
+    """The Arrow collect gives the Row collect's keys and matrix
+    bit-for-bit; NULL elements read as NaN, and NULL or ragged vectors
+    raise the errors converting collected Rows raised."""
+    from lanterndb_spark.plans.shape import collect_keyed_matrix
+
+    schema = "q_id int, query array<double>"
+    rng = np.random.default_rng(3)
+    rows = [(i, [float(x) for x in rng.normal(size=5)]) for i in range(40)]
+    df = spark.createDataFrame(rows, schema)
+    keys, mat = collect_keyed_matrix(df)
+    got = df.collect()
+    assert keys.tolist() == [r[0] for r in got]
+    assert np.array_equal(
+        mat, np.asarray([list(r[1]) for r in got], dtype=np.float64))
+    _k, m = collect_keyed_matrix(
+        spark.createDataFrame([(1, [1.0, None])], schema))
+    assert m[0, 0] == 1.0 and np.isnan(m[0, 1])
+    k, _m = collect_keyed_matrix(
+        spark.createDataFrame([(None, [1.0]), (2, [2.0])], schema))
+    assert k.dtype == object and k.tolist() == [None, 2]
+    with pytest.raises(TypeError):
+        collect_keyed_matrix(spark.createDataFrame([(1, None)], schema))
+    with pytest.raises(ValueError):
+        collect_keyed_matrix(
+            spark.createDataFrame([(1, [1.0]), (2, [1.0, 2.0])], schema))
